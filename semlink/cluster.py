@@ -8,15 +8,19 @@ graphs, each round two shuffles (groupBy node). Node ids are mention_id
 strings; ordering is Spark's UTF8 binary ordering, identical to
 Python's for ASCII ids, so cluster_id = min member id is deterministic.
 
-Superstep protocol (north rule: "checkpointed per superstep ...
-resume any superstep from checkpoint"):
-- after each (large-star + small-star) round, edges are written to
-  `<ckpt>/step=<i>` via TableIO (parquet `_SUCCESS` / Iceberg snapshot
-  = atomic commit) and read back — a hard lineage cut, without which
-  the plan tree grows exponentially across iterations;
-- `run_connected_components(resume=True)` scans for the highest
-  committed step and continues from it; a killed run re-enters at the
-  superstep boundary and produces byte-identical clusters (tested).
+Every superstep ends in a hard lineage cut, without which the plan
+tree grows exponentially across iterations. Three execution paths:
+- durable (the caller passes ``resume=True`` or ``stop_after_step``):
+  ids are encoded to dense longs and after each (large-star +
+  small-star) round the edges are written to `<ckpt>/edges_step_<i>`
+  via TableIO (parquet `_SUCCESS` / Iceberg snapshot = atomic commit)
+  and read back; `resume=True` scans for the highest committed step and
+  continues from it, so a killed run re-enters at the superstep
+  boundary and produces byte-identical clusters (tested);
+- local: supersteps on the id strings, cut with ``localCheckpoint``
+  (executor blocks — not durable, not resumable);
+- local union-find: a materialized edge set of at most
+  ``cfg.cc_local_fastpath_edges`` rows is labeled on the driver.
 """
 
 from __future__ import annotations
@@ -65,7 +69,7 @@ def small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _dense_rank_ids(nodes: DataFrame, num_parts: int | None = None,
+def _dense_rank_ids(nodes: DataFrame, num_parts: int | None = None, *,
                     materialize: bool = True) -> DataFrame:
     """Distributed two-phase global rank: (mention_id) → (mention_id, nid)
     with nid = 1-based rank in mention_id order.
@@ -183,28 +187,19 @@ def run_connected_components(
     spark = edges.sparkSession
     ckpt = ckpt_dir or cfg.checkpoint_dir
     io = TableIO(fmt=cfg.table_format, root=ckpt)
-    # durable table commits whenever the caller relies on the resume
-    # protocol; otherwise the configured cut (default: localCheckpoint,
-    # which skips the per-superstep parquet write+read round trip)
-    durable = (resume or stop_after_step is not None
-               or getattr(cfg, "cc_checkpoint", "table") == "table")
-
-    def cut(df: DataFrame, name: str) -> DataFrame:
-        if durable:
-            return io.checkpoint(df, name)
-        return df.localCheckpoint(eager=True)
-
+    # durable table commits exactly when the caller relies on the resume
+    # protocol; every other run cuts lineage with localCheckpoint, which
+    # skips the per-superstep parquet write+read round trip
+    durable = resume or stop_after_step is not None
     start = 0
-    if durable and not resume and os.path.isdir(ckpt) and io.fmt == "parquet":
-        shutil.rmtree(ckpt, ignore_errors=True)
 
     if not durable:
-        # the edge relation is consumed by TWO separate actions below
-        # (node-set distinct, then the encode join) — cut it once so an
-        # expensive upstream lineage (LSH chain, scored pair table)
+        # the edge relation is consumed by more than one action below
+        # (fast-path count, then the first superstep) — cut it once so
+        # an expensive upstream lineage (LSH chain, scored pair table)
         # isn't evaluated twice (guide §5 caching; round-6 measurement:
         # dedup_near_dup_clusters re-ran its whole LSH+Jaccard chain
-        # inside CC). Durable mode keeps the legacy protocol untouched.
+        # inside CC).
         edges = edges.localCheckpoint(eager=True)
         # Small-graph finishing step (round 6): min-member component
         # labels are algorithm-independent, so a graph whose
@@ -213,44 +208,41 @@ def run_connected_components(
         # superstep machinery. Identity with the superstep path is
         # pinned by tests (local==table on mixed graphs); the count is
         # one action over the checkpoint just taken.
-        cap = getattr(cfg, "cc_local_fastpath_edges", 0)
+        cap = cfg.cc_local_fastpath_edges
         if cap and edges.count() <= cap:
             return _local_union_find(edges)
-
-    # Node dictionary: mention_id strings → dense longs via rank over
-    # the sorted distinct ids. Rank is monotone in the string order, so
-    # min-label semantics (cluster_id = min member) survive the
-    # round-trip; CC shuffles/compares then move 8-byte longs instead
-    # of ~24-byte strings. Deterministic, hence resume-stable; also
-    # persisted to the checkpoint dir for auditability. The encode
-    # pays when superstep count × byte savings beats its ~4 extra edge
-    # passes — deep generic graphs, not hub-bounded diameter-2 pair
-    # graphs — so LOCAL runs make it configurable (cc_encode_ids,
-    # default off; labels are identical either way, hash-verified:
-    # Spark's UTF8 binary string order equals the rank order). Durable
-    # runs always encode (the resume layout stores node_ids).
-    encode = durable or getattr(cfg, "cc_encode_ids", True)
-    if not encode:
+        # Local supersteps run directly on the mention-id strings: the
+        # durable path's long encode costs ~4 extra passes over the edges
+        # and only pays on deep generic graphs, not the pipeline's
+        # hub-bounded diameter-2 graph (round-6 A/B at bench scale:
+        # encoded 8.6-9.9 s vs direct 6.4-6.7 s, labels hash-identical).
         node_ids = None
-        cur = edges  # already localCheckpointed above
-    elif resume and io.exists(spark, "node_ids"):
-        node_ids = io.read(spark, "node_ids")
+        cur = edges
     else:
-        # one scan (explode), not a 2-scan union — the input relation is
-        # the expensive thing to read at this point (cached wide plan)
-        nodes = (edges
-                 .select(F.explode(F.array("src", "dst")).alias("mention_id"))
-                 .distinct())
-        # materialize the distinct node set BEFORE ranking: the rank
-        # consumes its input twice more (range-partitioner sampling +
-        # the shuffle itself), and each re-evaluation of the upstream
-        # union+distinct costs a full pass over the edge relation —
-        # ~5 s per pass at bench scale, O(|edges|) at any scale. One
-        # compact materialized table absorbs all downstream passes.
-        nodes = cut(nodes, "nodes")
-        node_ids = cut(_dense_rank_ids(nodes), "node_ids")
-
-    if encode:
+        if not resume and os.path.isdir(ckpt) and io.fmt == "parquet":
+            shutil.rmtree(ckpt, ignore_errors=True)
+        # Node dictionary: mention_id strings → dense longs via rank
+        # over the sorted distinct ids. Rank is monotone in the string
+        # order, so min-label semantics (cluster_id = min member)
+        # survive the round-trip. Deterministic, hence resume-stable:
+        # the resume layout stores node_ids next to the supersteps.
+        if resume and io.exists(spark, "node_ids"):
+            node_ids = io.read(spark, "node_ids")
+        else:
+            # one scan (explode), not a 2-scan union — the input
+            # relation is the expensive thing to read at this point
+            nodes = (edges
+                     .select(F.explode(F.array("src", "dst"))
+                             .alias("mention_id"))
+                     .distinct())
+            # materialize the distinct node set BEFORE ranking: the
+            # rank consumes its input twice more (range-partitioner
+            # sampling + the shuffle itself), and each re-evaluation of
+            # the upstream union+distinct costs a full pass over the
+            # edge relation. One compact committed table absorbs all
+            # downstream passes.
+            nodes = io.checkpoint(nodes, "nodes")
+            node_ids = io.checkpoint(_dense_rank_ids(nodes), "node_ids")
         if resume and io.exists(spark, "edges_step_init"):
             cur = io.read(spark, "edges_step_init")
         else:
@@ -264,7 +256,7 @@ def run_connected_components(
             # materialize the encoded edge list once — every superstep
             # consumes its input twice (sym → groupBy + join), so an
             # unmaterialized encode would re-run its joins per consumption
-            cur = cut(cur, "edges_step_init")
+            cur = io.checkpoint(cur, "edges_step_init")
 
     if resume:
         step = _max_committed_step(spark, io, ckpt)
@@ -306,7 +298,7 @@ def run_connected_components(
     labels = labels.select(
         F.col("src").alias("nid"),
         F.least("mn", F.col("src")).alias("cl_id"))
-    if not encode:
+    if node_ids is None:
         return labels.select(F.col("nid").alias("mention_id"),
                              F.col("cl_id").alias("cluster_id"))
     # decode back to mention_id strings

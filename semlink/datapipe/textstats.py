@@ -63,8 +63,8 @@ def word_token_count(col: Column) -> Column:
     run, exactly like the regex), collapse runs with bounded replace
     passes, then count survivors by translate-deletion length diff.
 
-    MEASURED NEGATIVE RESULT (round 4, tools/datapipe_scaling.py
-    'wordtok' cell, 1M docs): regexp_extract_all beats this chain at
+    MEASURED NEGATIVE RESULT (round 4 'wordtok' scaling cell, 1M
+    docs, BENCH/BASELINE.md): regexp_extract_all beats this chain at
     BOTH widths (regex 5.2 s@8 / 4.3 s@32 vs 8.3 / 5.6) — the
     thread-serialization cliff is regexp_replace-specific and
     extract_all scales like every other expression on this host

@@ -301,7 +301,7 @@ def attach_page_features(cands: DataFrame, pages: DataFrame) -> DataFrame:
 # ------------------------------------------------------------ context resolution
 
 def relatedness_table(page_links: DataFrame, entities: DataFrame,
-                      cfg: SemlinkConfig = DEFAULT,
+                      cfg: SemlinkConfig = DEFAULT, *,
                       materialize: bool = True) -> DataFrame:
     """X6 precompute: Milne-Witten relatedness between entity pages
     (Milne & Witten CIKM'08, the measure the reference's context

@@ -3,11 +3,14 @@
 
     spark-submit --py-files semlink.zip -m semlink.pipeline \
         --transcripts <path|iceberg table> --anchors <...> \
-        --page-links <...> --out <dir> [--step link|score|cluster|eval]
+        --page-links <...> --out <dir> [--labeled-pairs <...>] \
+        [--fmt parquet|iceberg] [--ckpt <dir>]
 
-Stages are individually resumable through named checkpoint tables
-(mentions → resolved → edges → labels); the clustering superstep loop
-additionally checkpoints every iteration (cluster.py).
+Stages (link → score → cluster → eval) run in one pass and are only
+``persist()``ed, not committed, so a killed run starts over. Clustering
+takes CC's non-durable paths; durable, resumable supersteps are
+available to direct ``run_connected_components(resume=True)`` callers
+(cluster.py).
 """
 
 from __future__ import annotations

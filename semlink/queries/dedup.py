@@ -48,12 +48,6 @@ _BUCKET_SQL = " UNION ALL ".join(
         FROM ({_MINHASH_SQL})"""
     for b in range(dd.LSH_BANDS))
 
-@q("dedup_lsh_buckets", _BUCKET_SQL)
-def dedup_lsh_buckets(spark, sf_dir):
-    sigs = dd.minhash_signatures(_docs(spark, sf_dir))
-    return dd.lsh_buckets(sigs).withColumn("band", F.col("band").cast("int"))
-
-
 @q("dedup_lsh_pairs", f"""
   WITH b AS ({_BUCKET_SQL}),
   sized AS (SELECT band, bucket FROM b GROUP BY band, bucket
@@ -68,50 +62,11 @@ def dedup_lsh_pairs(spark, sf_dir):
     return dd.lsh_candidate_pairs(dd.lsh_buckets(sigs))
 
 
-@q("dedup_ngram_jaccard", f"""
-  WITH pairs AS (
-    SELECT a.doc_id AS left_id, b.doc_id AS right_id
-    FROM documents a JOIN documents b
-      ON b.doc_id = a.doc_id + 1 AND a.lang = b.lang),
-  sh AS ({_SHINGLE_SQL}),
-  sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-  ex AS (SELECT doc_id, unnest(sh) AS s FROM sh),
-  inter AS (SELECT p.left_id, p.right_id, count(*) AS inter
-            FROM pairs p
-            JOIN ex el ON el.doc_id = p.left_id
-            JOIN ex er ON er.doc_id = p.right_id AND er.s = el.s
-            GROUP BY 1, 2)
-  SELECT p.left_id, p.right_id,
-         coalesce(i.inter, 0) AS inter,
-         CAST(ROUND(CAST(coalesce(i.inter, 0) AS DOUBLE)
-              / (sl.n_sh + sr.n_sh - coalesce(i.inter, 0)) * {SCALE})
-              AS BIGINT) AS jaccard6
-  FROM pairs p
-  LEFT JOIN inter i USING (left_id, right_id)
-  JOIN sizes sl ON sl.doc_id = p.left_id
-  JOIN sizes sr ON sr.doc_id = p.right_id
-""")
-def dedup_ngram_jaccard(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("left_id"), "lang")
-    b = d.select(F.col("doc_id").alias("right_id"),
-                 F.col("lang").alias("l2"))
-    pairs = (a.join(b, (F.col("right_id") == F.col("left_id") + 1)
-                    & (F.col("lang") == F.col("l2")))
-             .select("left_id", "right_id"))
-    jac = dd.ngram_jaccard(d, pairs)
-    return jac.select(
-        "left_id", "right_id", F.col("inter").cast("bigint").alias("inter"),
-        _r6(F.col("inter").cast("double")
-            / (F.col("n_l") + F.col("n_r") - F.col("inter"))).alias("jaccard6"))
-
-
 # ---------------------------------------------------- consolidated
 # (window-budget consolidation — see queries/rl.py note.) The exact
 # Jaccard verify runs ON the LSH candidate pairs, so one hash-gated
 # entry pins the whole minhash → bucket → capped pair join → verify
-# chain (each upstream stage changes the hash) while freeing the two
-# single-purpose slots for the new linkage operators.
+# chain (each upstream stage changes the hash).
 
 @q("dedup_lsh_jaccard", f"""
   WITH b AS ({_BUCKET_SQL}),
@@ -142,8 +97,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 """)
 def dedup_lsh_jaccard(spark, sf_dir):
     """LSH candidate generation + exact shingle-Jaccard verify in one
-    hash-gated entry (consolidates dedup_lsh_pairs +
-    dedup_ngram_jaccard; both remain registered for bench)."""
+    hash-gated entry."""
     d = _docs(spark, sf_dir)
     sigs = dd.minhash_signatures(d)
     pairs = dd.lsh_candidate_pairs(dd.lsh_buckets(sigs))

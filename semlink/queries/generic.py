@@ -1,14 +1,13 @@
-"""Generic relational surface (agg / window / rollup / top-k join).
+"""Generic relational surface: the TPC-H-style pricing summary.
 
-Demoted from the driver contract in round 4 (they exercise Spark, not
-this engine — VERDICT r03 wrong #1) but kept registered for bench and
-as oracle-parity smoke queries; __spark_entry__ filters them out."""
+Demoted from the driver contract in round 4 (it exercises Spark, not
+this engine — VERDICT r03 wrong #1) but kept registered as a bench
+leaf; __spark_entry__ filters it out."""
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from . import SCALE, _r6, _read, q
+from . import SCALE, _read, q
 
 
 @q("agg_pricing_summary", f"""
@@ -32,61 +31,3 @@ def agg_pricing_summary(spark, sf_dir):
                                .cast("bigint")).cast("double") / F.count("*"))
                  .cast("bigint").alias("avg_disc6"),
                  F.count("*").alias("n_rows")))
-
-
-@q("join_topk_customers", """
-  WITH tot AS (
-    SELECT c.c_mktsegment, c.c_custkey,
-           CAST(sum(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-             AS total_cents
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY 1, 2)
-  SELECT c_mktsegment, c_custkey, total_cents
-  FROM (SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-                                     ORDER BY total_cents DESC, c_custkey) AS rk
-        FROM tot)
-  WHERE rk <= 3
-""")
-def join_topk_customers(spark, sf_dir):
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    tot = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-           .groupBy("c_mktsegment", "c_custkey")
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-                .alias("total_cents")))
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.desc("total_cents"), F.asc("c_custkey"))
-    return (tot.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 3).drop("rk"))
-
-
-@q("window_last_event", """
-  SELECT user_id, event_id, event_type
-  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rk
-        FROM events)
-  WHERE rk = 1
-""")
-def window_last_event(spark, sf_dir):
-    e = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (e.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("user_id", "event_id", "event_type"))
-
-
-@q("rollup_event_counts", f"""
-  SELECT coalesce(event_type, '__all__') AS event_type,
-         count(*) AS n,
-         CAST(ROUND(sum(value) * {SCALE}) AS BIGINT) AS sum_value6
-  FROM events
-  GROUP BY ROLLUP (event_type)
-""")
-def rollup_event_counts(spark, sf_dir):
-    e = _read(spark, sf_dir, "events")
-    return (e.rollup("event_type")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.round(F.col("value") * 1_000_000).cast("bigint"))
-                 .alias("sum_value6"))
-            .withColumn("event_type",
-                        F.coalesce("event_type", F.lit("__all__"))))

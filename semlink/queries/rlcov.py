@@ -11,29 +11,6 @@ from . import SCALE, _docs, _r6, _read, q
 from .rl import _DICT_SQL, _TOK_SQL, _spark_dict
 
 
-@q("rl_clean_text", r"""
-  SELECT doc_id,
-         CASE WHEN contains(dirty, 'http') OR contains(dirty, '@')
-                   OR contains(dirty, 'RT')
-              THEN regexp_replace(regexp_replace(regexp_replace(dirty,
-                     'https?://\S+', ' ', 'g'), '@\w+', ' ', 'g'),
-                     '\bRT\b', ' ', 'g')
-              ELSE dirty END AS cleaned
-  FROM (SELECT doc_id,
-               'RT @user' || CAST(doc_id AS VARCHAR) || ' ' || text ||
-               ' see http://x.co/' || CAST(doc_id % 97 AS VARCHAR) AS dirty
-        FROM documents)
-""")
-def rl_clean_text(spark, sf_dir):
-    """T1: tweet-style cleaning (URL / @mention / RT strip) on texts
-    with injected markers, oracle-checked against the regex chain."""
-    d = _docs(spark, sf_dir)
-    dirty = F.concat(F.lit("RT @user"), F.col("doc_id").cast("string"),
-                     F.lit(" "), F.col("text"), F.lit(" see http://x.co/"),
-                     (F.col("doc_id") % 97).cast("string"))
-    return d.select("doc_id", clean_expr(dirty).alias("cleaned"))
-
-
 _CANDS_SQL = f"""
   WITH dict AS ({_DICT_SQL}),
   toks AS (SELECT DISTINCT doc_id, token FROM ({_TOK_SQL}))
@@ -56,14 +33,6 @@ def _spark_cands(spark, sf_dir):
                     F.col("sense").alias("target_id"), "prior6"))
 
 
-@q("rl_unique_filter", f"""
-  WITH cands AS ({_CANDS_SQL}),
-  dup AS (SELECT mention_id, target_id, prior6 FROM cands
-          UNION ALL
-          SELECT mention_id, target_id, prior6 // 2 FROM cands)
-  SELECT mention_id, target_id, max(prior6) AS sense_prob
-  FROM dup GROUP BY 1, 2
-""")
 def rl_unique_filter(spark, sf_dir):
     """F2: one row per (mention, target) keeping max sense_prob, fed a
     candidate set with injected half-probability duplicates."""
@@ -73,34 +42,6 @@ def rl_unique_filter(spark, sf_dir):
     dup = base.withColumn(
         "sense_prob", F.floor(F.col("sense_prob") / 2).cast("bigint"))
     return unique_filter(base.unionByName(dup))
-
-
-@q("rl_dict_probabilities", f"""
-  WITH dict AS ({_DICT_SQL})
-  SELECT anchor_norm, sense AS target_id,
-         CAST(ROUND(CAST(sense_cnt AS DOUBLE) / anchor_total * {SCALE})
-              AS BIGINT) AS prior6,
-         CAST(ROUND(CAST(anchor_total AS DOUBLE) / (anchor_total + 7)
-              * {SCALE}) AS BIGINT) AS link_prob6,
-         CAST(ROUND(CAST(sense_cnt AS DOUBLE) / (anchor_total + 7)
-              * {SCALE}) AS BIGINT) AS sense_prob6
-  FROM dict
-""")
-def rl_dict_probabilities(spark, sf_dir):
-    """A4-A6 via the production with_probabilities() column arithmetic
-    (anchor_text_total synthesized as link_total + 7)."""
-    from ..linking import with_probabilities
-    d = _spark_dict(spark, sf_dir)
-    anchors = d.select(
-        "anchor_norm", F.col("sense").alias("target_id"),
-        F.col("sense_cnt").alias("sense_link_count"),
-        F.col("anchor_total").alias("anchor_link_total"),
-        (F.col("anchor_total") + 7).alias("anchor_text_total"))
-    p = with_probabilities(anchors)
-    return p.select("anchor_norm", "target_id",
-                    _r6(F.col("prior_prob")).alias("prior6"),
-                    _r6(F.col("link_prob")).alias("link_prob6"),
-                    _r6(F.col("sense_prob")).alias("sense_prob6"))
 
 
 _RD_NORM_TITLE = NORMALIZE_DUCKDB_SQL.format(col="title")
@@ -259,12 +200,6 @@ def rl_salted_join(spark, sf_dir):
 
 _STOP_LIST = ", ".join(f"'{w}'" for w in ts.EN_STOPWORDS)
 
-@q("rl_stopword_filter", f"""
-  WITH toks AS (SELECT DISTINCT doc_id, token FROM ({_TOK_SQL}))
-  SELECT CAST(doc_id AS VARCHAR) || ':' || token AS mention_id,
-         token AS ngram_norm
-  FROM toks WHERE token NOT IN ({_STOP_LIST})
-""")
 def rl_stopword_filter(spark, sf_dir):
     """F4: bare-stopword mention keys are dropped (reference stopword
     skip); multi-word keys containing stopwords survive."""
@@ -342,52 +277,6 @@ def _spark_page_graph(spark, sf_dir):
     return pl, pages
 
 
-@q("rl_page_degree", f"""
-  WITH {_PAGE_GRAPH_SQL}
-  SELECT target_id, title, is_redirect, inlink_count, outlink_count
-  FROM pagestats
-""")
-def rl_page_degree(spark, sf_dir):
-    """A9: build_page_stats in/out-degree over a synthetic page-link
-    graph (orders → part buckets folded into one 500-page id space)."""
-    from ..dictionary import build_page_stats
-    pl, pages = _spark_page_graph(spark, sf_dir)
-    s = build_page_stats(pl, pages)
-    return s.select("target_id", "title", "is_redirect",
-                    F.col("inlink_count").cast("bigint").alias("inlink_count"),
-                    F.col("outlink_count").cast("bigint").alias("outlink_count"))
-
-
-@q("rl_page_features", f"""
-  WITH {_PAGE_GRAPH_SQL},
-  cands AS (SELECT 'm:' || CAST(p_partkey AS VARCHAR) AS mention_id,
-                   p_partkey % 500 AS target_id
-            FROM part)
-  SELECT c.mention_id, c.target_id,
-         ps.inlink_count AS f_inlinks,
-         ps.outlink_count AS f_outlinks,
-         ps.is_redirect AS f_is_redirect
-  FROM cands c LEFT JOIN pagestats ps USING (target_id)
-""")
-def rl_page_features(spark, sf_dir):
-    """J4 + X5: attach_page_features broadcast left join carrying
-    article features (degree stats, redirect flag) onto candidates."""
-    from ..dictionary import build_page_stats
-    from ..linking import attach_page_features
-    pl, pages = _spark_page_graph(spark, sf_dir)
-    stats = build_page_stats(pl, pages)
-    p = _read(spark, sf_dir, "part")
-    cands = p.select(
-        F.concat_ws(":", F.lit("m"), F.col("p_partkey").cast("string"))
-        .alias("mention_id"),
-        (F.col("p_partkey") % 500).alias("target_id"))
-    out = attach_page_features(cands, stats)
-    return out.select("mention_id", "target_id",
-                      F.col("f_inlinks").cast("bigint").alias("f_inlinks"),
-                      F.col("f_outlinks").cast("bigint").alias("f_outlinks"),
-                      "f_is_redirect")
-
-
 # ------------------------------------------------------ consolidated
 # (window-budget consolidation — see queries/rl.py note)
 
@@ -410,9 +299,7 @@ def rl_page_features(spark, sf_dir):
 def rl_textnorm(spark, sf_dir):
     """T1 → T4 composed in one entry: tweet-style cleaning (URL /
     @mention / RT strip) followed by blocking-key normalization of the
-    cleaned text (consolidates rl_clean_text +
-    rl_normalize_blocking_key; the T4 distinct-input variant stays
-    registered for bench)."""
+    cleaned text."""
     from ..textnorm import normalize_expr
     d = _docs(spark, sf_dir)
     dirty = F.concat(F.lit("RT @user"), F.col("doc_id").cast("string"),
@@ -435,8 +322,7 @@ def rl_textnorm(spark, sf_dir):
 def rl_page_graph(spark, sf_dir):
     """A9 + J4 + X5 in one entry: build_page_stats in/out-degree over
     the synthetic page graph AND the attach_page_features broadcast
-    left join carrying title/redirect/degree onto every candidate
-    (consolidates rl_page_degree + rl_page_features)."""
+    left join carrying title/redirect/degree onto every candidate."""
     from ..dictionary import build_page_stats
     from ..linking import attach_page_features
     pl, pages = _spark_page_graph(spark, sf_dir)
@@ -478,12 +364,9 @@ def rl_page_graph(spark, sf_dir):
   FROM stop
 """)
 def rl_filter_battery(spark, sf_dir):
-    """F1 + F2 + F4 in one hash-gated entry (consolidates
-    rl_threshold_filter + rl_unique_filter + rl_stopword_filter so
-    the driver's finite recording window frees two slots for the
-    linkeval family): each filter's FULL row set is preserved under a
-    (filt, key, val) shape, so the combined hash is exactly as strong
-    as the three originals'."""
+    """F1 + F2 + F4 in one hash-gated entry: each filter's FULL row
+    set is preserved under a (filt, key, val) shape, so the combined
+    hash is exactly as strong as three separate ones."""
     from .rl import rl_threshold_filter
     thr = rl_threshold_filter(spark, sf_dir).select(
         F.lit("threshold").alias("filt"),

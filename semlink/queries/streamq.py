@@ -7,58 +7,6 @@ from pyspark.sql import functions as F
 from . import q
 
 
-@q("stream_candidates_availablenow", None)   # rows-only: streaming engine
-def stream_candidates_availablenow(spark, sf_dir):
-    """§2.10: file-source micro-batch streaming linking (availableNow
-    trigger → memory sink); deterministic row set, engine-specific
-    execution — rows-only by design."""
-    import tempfile
-    from semlink.fixtures import generate, to_spark
-    from semlink.streaming import stream_candidates
-    d = to_spark(spark, generate("tiny"))
-    src = tempfile.mkdtemp(prefix="semlink_q_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="semlink_q_stream_ckpt_")
-    d["transcripts"].coalesce(2).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(d["transcripts"].schema).parquet(src)
-    out = stream_candidates(stream, d["anchors"])
-    qy = (out.select("mention_id", "target_id").writeStream
-          .format("memory").queryName("q_stream_cands")
-          .option("checkpointLocation", ckpt)
-          .trigger(availableNow=True).start())
-    if not qy.awaitTermination(180):
-        qy.stop()
-        raise RuntimeError('streaming query timed out')
-    return spark.sql("SELECT * FROM q_stream_cands")
-
-
-@q("stream_session_windows", None)   # rows-only: streaming engine
-def stream_session_windows(spark, sf_dir):
-    """§2.10: session-windowed per-conversation candidate counts
-    (windowed_mention_counts) via availableNow micro-batches — the
-    streaming analogue of the reference's rolling `context`.
-    Deterministic window bounds on the fixture; engine-specific
-    execution — rows-only by design (VERDICT r02 next #6)."""
-    import tempfile
-    from semlink.fixtures import generate, to_spark
-    from semlink.streaming import windowed_mention_counts
-    d = to_spark(spark, generate("tiny"))
-    src = tempfile.mkdtemp(prefix="semlink_q_swin_src_")
-    ckpt = tempfile.mkdtemp(prefix="semlink_q_swin_ckpt_")
-    d["transcripts"].coalesce(2).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(d["transcripts"].schema).parquet(src)
-    out = windowed_mention_counts(stream, d["anchors"], gap="30 minutes")
-    qy = (out.select("conv_id", F.col("w.start").alias("w_start"),
-                     F.col("w.end").alias("w_end"),
-                     "n_candidates", "n_entities")
-          .writeStream.format("memory").queryName("q_swin")
-          .option("checkpointLocation", ckpt)
-          .trigger(availableNow=True).start())
-    if not qy.awaitTermination(180):
-        qy.stop()
-        raise RuntimeError('streaming query timed out')
-    return spark.sql("SELECT * FROM q_swin")
-
-
 @q("stream_rolling_context", None)   # rows-only: stateful streaming engine
 def stream_rolling_context(spark, sf_dir):
     """§2.10: the custom applyInPandasWithState rolling-context
@@ -135,9 +83,8 @@ def stream_link_sessions(spark, sf_dir):
     (windowed_mention_counts, which re-runs the linking join per the
     streaming API) — returned as window rows joined with exact
     per-conversation candidate totals, so the one driver-recorded
-    streaming row witnesses the whole §2.10 batch==stream family. Consolidates
-    stream_candidates_availablenow + stream_session_windows (both stay
-    registered); engine-specific execution — rows-only by design."""
+    streaming row witnesses the whole §2.10 batch==stream family;
+    engine-specific execution — rows-only by design."""
     import tempfile
     from semlink.fixtures import generate, to_spark
     from semlink.streaming import stream_candidates, windowed_mention_counts

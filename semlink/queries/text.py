@@ -76,20 +76,6 @@ def text_langid(spark, sf_dir):
             .select("doc_id", "lang", "lang_pred", "top_score6"))
 
 
-@q("text_token_stats", f"""
-  SELECT doc_id,
-         len(list_filter(string_split_regex(trim(text), ' +'), x -> x <> ''))
-           AS ws_tokens,
-         len(regexp_extract_all(text, '{ts.WORD_RE}')) AS word_tokens,
-         length(text) AS n_chars_out
-  FROM documents
-""")
-def text_token_stats(spark, sf_dir):
-    d = ts.with_token_stats(_docs(spark, sf_dir).drop("n_chars"))
-    return d.select("doc_id", "ws_tokens", "word_tokens",
-                    F.col("n_chars").alias("n_chars_out"))
-
-
 @q("text_quality_score", f"""
   SELECT doc_id,
          {_QUALITY6_EXPR} AS quality6
@@ -444,8 +430,7 @@ def text_pii_stats(spark, sf_dir):
 """)
 def text_token_quality(spark, sf_dir):
     """Token stats + the 3-term quality score joined per doc in one
-    entry (consolidates text_token_stats + text_quality_score; both
-    stay registered for bench)."""
+    entry."""
     d = _docs(spark, sf_dir).drop("n_chars")
     t = ts.with_token_stats(d).select(
         "doc_id", "ws_tokens", "word_tokens",

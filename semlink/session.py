@@ -11,6 +11,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """Driver heap size: ``SEMLINK_DRIVER_MEM`` when set (deployment
+    override), else half of the host's physical RAM in MiB.
+
+    In local[N] the driver JVM IS the executor, and its resident size
+    runs well past ``-Xmx`` (metaspace, code cache, Arrow and Netty
+    buffers, GC structures), so the heap gets half the RAM and the rest
+    is left to the JVM overhead and the Python workers; a heap near or
+    above physical RAM gets the JVM OOM-killed once it fills.
+    """
+    env = os.environ.get("SEMLINK_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "semlink",
     cores: int | None = None,
@@ -55,9 +72,9 @@ def get_spark(
         # keep the driver lean; we never collect anything big. In
         # local[N] the driver JVM IS the executor (N task threads +
         # Arrow batches + localCheckpoint blocks share one heap), so
-        # size it for that; a real cluster sizes executors separately
-        # and overrides via spark-submit (sandbox: 128 GiB host).
-        .config("spark.driver.memory", os.environ.get("SEMLINK_DRIVER_MEM", "16g"))
+        # size it from the host (driver_memory); a real cluster sizes
+        # executors separately and overrides via spark-submit.
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

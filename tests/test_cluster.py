@@ -67,18 +67,18 @@ def test_cc_resume_identical(spark, tmp_path):
 
 
 def test_cc_local_checkpoint_equals_table(spark, tmp_path):
-    """The default fast lineage cut (cc_checkpoint='local') must
-    produce labels identical to the durable table-commit protocol —
-    the round-6 optimization changes WHERE the per-superstep cut
-    lives, never the labels."""
+    """The default fast lineage cut (localCheckpoint) must produce
+    labels identical to the durable table-commit protocol that
+    resume=True selects — the cut changes WHERE the per-superstep
+    lineage ends, never the labels."""
     edges = _graphs()["chain"] + _graphs()["random"] + _graphs()["mixed"]
     df = spark.createDataFrame(edges, "src string, dst string")
+    # resume=True on a fresh dir: nothing to resume, so this is a full
+    # run under the durable protocol
     t = run_connected_components(
-        df, SemlinkConfig(cc_checkpoint="table"),
-        ckpt_dir=str(tmp_path / "tbl"))
+        df, SemlinkConfig(), ckpt_dir=str(tmp_path / "tbl"), resume=True)
     loc = run_connected_components(
-        df, SemlinkConfig(cc_checkpoint="local"),
-        ckpt_dir=str(tmp_path / "loc"))
+        df, SemlinkConfig(), ckpt_dir=str(tmp_path / "loc"))
     assert sorted(map(tuple, loc.collect())) == \
         sorted(map(tuple, t.collect()))
     # local mode must not have written any superstep tables
@@ -87,7 +87,7 @@ def test_cc_local_checkpoint_equals_table(spark, tmp_path):
     # and the size-gated union-find fast path must equal the local
     # SUPERSTEP path too (cap=0 disables the fast path)
     steps = run_connected_components(
-        df, SemlinkConfig(cc_checkpoint="local", cc_local_fastpath_edges=0),
+        df, SemlinkConfig(cc_local_fastpath_edges=0),
         ckpt_dir=str(tmp_path / "loc0"))
     assert sorted(map(tuple, steps.collect())) == \
         sorted(map(tuple, loc.collect()))
@@ -174,12 +174,12 @@ def test_cc_path_graph_depth(spark, tmp_path):
         [(ids[i], ids[i + 1]) for i in range(n - 1)], "src string, dst string"
     ).repartition(8)
     ckpt = str(tmp_path / "cc_path")
-    # cc_checkpoint="table": this test additionally asserts the
-    # superstep-commit COUNT by listing the durable checkpoint dirs,
-    # so it pins the durable protocol explicitly (the default "local"
-    # mode cuts lineage via localCheckpoint and writes no dirs)
-    cfg = SemlinkConfig(checkpoint_dir=ckpt, cc_checkpoint="table")
-    labels = run_connected_components(edges, cfg, ckpt_dir=ckpt)
+    # resume=True on a fresh dir selects the durable protocol: this test
+    # additionally asserts the superstep-commit COUNT by listing the
+    # durable checkpoint dirs (the default local mode cuts lineage via
+    # localCheckpoint and writes no dirs)
+    cfg = SemlinkConfig(checkpoint_dir=ckpt)
+    labels = run_connected_components(edges, cfg, ckpt_dir=ckpt, resume=True)
     got = labels.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("cluster_id").alias("k"),

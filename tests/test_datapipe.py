@@ -187,9 +187,15 @@ def test_shingles_exploded_matches_shingle_set(spark):
         exp.setdefault(r.doc_id, set()).add(r.s)
     assert {k: sorted(v) for k, v in exp.items()} == hof
 
-    a = {tuple(r) for r in minhash_signatures(d, impl="hof").collect()}
-    b = {tuple(r) for r in minhash_signatures(d, impl="exploded").collect()}
-    assert a == b and len(a) == len(rows)
+    # minhash signature = per-permutation min of md5("i:shingle") over
+    # the exploded shingle rows, recomputed here with hashlib
+    import hashlib
+    from semlink.datapipe.dedup import MINHASH_K
+    want = {(doc, *[min(hashlib.md5(f"{i}:{s}".encode()).hexdigest()
+                        for s in sh) for i in range(MINHASH_K)])
+            for doc, sh in exp.items()}
+    got = {tuple(r) for r in minhash_signatures(d).collect()}
+    assert got == want and len(got) == len(rows)
 
 
 def test_stratified_sample_deterministic_and_capped(spark):

@@ -143,13 +143,27 @@ def test_near_dup_edges_ivf_matches_exact(spark, emb):
     assert len(exact) > 0
 
 
-def test_cosine_impls_agree(spark):
-    """The three cosine implementations (HOF fold, Arrow numpy, unrolled
-    codegen) produce the same sim6 on random-ish vectors, nulls, and
-    zero vectors."""
-    from pyspark.sql import functions as F
+def test_cosine_matches_left_fold_reference(spark):
+    """The cosine kernel returns, bit for bit, the double a pure-Python
+    left fold computes (dot and both squared norms summed in index
+    order) on random-ish vectors, and 0.0 for a zero vector and a null
+    vector."""
+    import math
 
     from semlink.datapipe.simsearch import cosine_similarity
+
+    def ref(a, b):
+        if a is None or b is None:
+            return 0.0
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot = dot + x * y
+        for x in a:
+            na = na + x * x
+        for y in b:
+            nb = nb + y * y
+        na, nb = math.sqrt(na), math.sqrt(nb)
+        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
 
     rows = []
     for i in range(50):
@@ -157,21 +171,15 @@ def test_cosine_impls_agree(spark):
         b = [((i * 11 + 3 * j) % 17 - 8) / 9.0 for j in range(8)]
         rows.append((i, a, b))
     rows.append((50, [0.0] * 8, [1.0] * 8))     # zero vector
+    rows.append((51, None, [1.0] * 8))          # null vector
     df = spark.createDataFrame(
         rows, "id int, q_emb array<double>, c_emb array<double>")
-    df = df.unionByName(spark.createDataFrame(
-        [(51, None, [1.0] * 8)],
-        "id int, q_emb array<double>, c_emb array<double>"))
 
-    outs = {}
-    for impl in ("sql", "arrow", "fixed"):
-        col = cosine_similarity("q_emb", "c_emb", impl=impl,
-                                dim=8 if impl == "fixed" else None)
-        outs[impl] = {r.id: r.s6 for r in df.select(
-            "id", F.round(col * 1_000_000).cast("bigint").alias("s6"))
-            .collect()}
-    assert outs["sql"] == outs["arrow"] == outs["fixed"]
-    assert outs["sql"][50] == 0 and outs["sql"][51] == 0
+    got = {r.id: r.s for r in df.select(
+        "id", cosine_similarity("q_emb", "c_emb").alias("s")).collect()}
+    want = {i: ref(a, b) for i, a, b in rows}
+    assert got == want
+    assert got[50] == 0.0 and got[51] == 0.0
 
 
 def test_embed_text_properties(spark):

@@ -36,7 +36,12 @@ OFFSETS = {
 
 
 def main() -> None:
+    if len(sys.argv) not in (3, 4):
+        sys.exit("usage: python tools/replicate_sf.py <src_sf_dir> <dst_dir> [N=4]")
     src, dst = sys.argv[1], sys.argv[2]
+    if os.path.realpath(src) == os.path.realpath(dst):
+        sys.exit("replicate_sf: <dst_dir> must differ from <src_sf_dir> "
+                 "(tables are overwritten in place)")
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     from semlink.session import get_spark
     spark = get_spark("replicate-sf")
@@ -47,6 +52,13 @@ def main() -> None:
         keyed = [c for c in df.columns if c in OFFSETS]
         out = df
         if keyed:
+            # a source key at or above its stride would collide with the
+            # next replica's remapped keys
+            mx = df.agg(*[F.max(c).alias(c) for c in keyed]).first()
+            for c in keyed:
+                if mx[c] is not None and mx[c] >= OFFSETS[c]:
+                    sys.exit(f"replicate_sf: {t}.{c} max key {mx[c]} >= "
+                             f"replica stride {OFFSETS[c]}")
             out = df.crossJoin(reps)
             for c in keyed:
                 out = out.withColumn(
